@@ -1,5 +1,8 @@
 package graft.streaming
 
+import java.io.{ObjectInputStream, ObjectOutputStream}
+import scala.collection.mutable
+
 /** The reference's example workloads as [[KeyedStateMachine]]s — each runs
   * unchanged under batch replay ([[Replay.run]]) and live streaming
   * ([[AspStream.run]]). Semantics studied from the reference (cited);
@@ -20,10 +23,14 @@ object Machines {
   /** FIFO multi-lot removal (reference e5_retail_cart.py:53-64): remove
     * `qty` units of the matching name across lots, oldest first; a lot
     * holding more than the remainder is reduced in place. Generic over
-    * the lot type — ONE definition shared by the Double reference
-    * machine, the transformWithState cart ([[TypedCartProcessor]]), and
-    * the integer-domain hash gate ([[CartMachineQ]], q135), so the
-    * subtle branch (partial vs whole-lot consumption) cannot fork. */
+    * the lot type — ONE definition shared by the two Double carts, the
+    * reference machine ([[CartMachine]]) and the transformWithState cart
+    * ([[TypedCartProcessor]]), so the subtle branch (partial vs
+    * whole-lot consumption) cannot fork between them. Both keep the
+    * whole lot list because their Double totals are bit-exact against
+    * the oracles only when summed in lot order. [[CartMachineQ]] does
+    * not use it: its exact Long sums commute, so it keeps running
+    * totals and per-name FIFO queues instead (same consumption rule). */
   def removeFifo[L](items: Vector[L], qty: Int)(
       matches: L => Boolean, qtyOf: L => Int, withQty: (L, Int) => L): Vector[L] = {
     var remaining = qty
@@ -68,17 +75,41 @@ object Machines {
   // domain: discounted cost = floorDiv(cost·9, 10) (≡ DuckDB `//` — the
   // q132 portability discipline), totals are exact Long sums, so the
   // replay output hash-compares against a DuckDB recursive CTE carrying
-  // the cart list. Removal IS [[removeFifo]] — one definition.
+  // the cart list. Removal follows [[removeFifo]]'s rule: the oldest
+  // lots of the matching name, a partial lot reduced in place.
 
   final case class CartOpQ(user_id: Long, ts_us: Long, event_id: Long,
                            name: String, cost: Long, qty: Int, add: Boolean)
-  final case class LotQ(name: String, cost: Long, qty: Int)
+  /** One lot of a name's FIFO queue in [[CartMachineQ]]. */
+  final case class LotQ(cost: Long, qty: Int)
   final case class CartTotalQ(user_id: Long, ts_us: Long, event_id: Long,
                               total_milli: Long, n_items: Long)
 
+  /** O(1) amortized per operation. The totals are exact Long sums
+    * (wrapping, so still exact modulo 2^64), which do not depend on lot
+    * order: they are kept as running fields, adjusted by each add and
+    * each consumed lot. A removal only ever consumes the oldest lots of
+    * its own name, so the lots are grouped by name, each group a FIFO
+    * queue, and a removal touches only the front of one queue. Emits
+    * exactly what summing the whole lot list in order would.
+    *
+    * State evolution ([[AspStream]]'s contract): this layout replaced a
+    * single `Vector` of lots. The class deliberately pins no
+    * `serialVersionUID`, so a checkpoint written with the old layout
+    * fails loudly at restore with `InvalidClassException`. Pinning
+    * would let such a blob past that check into a layout it does not
+    * match, where the old cart's lots have no field to land in: the
+    * silent empty-cart restore the contract forbids.
+    *
+    * The lots serialize as primitives, name by name (`writeObject`),
+    * not as the collections' object graph: [[AspStream]] writes one blob
+    * per key per micro-batch, and the graph form was larger and slower
+    * to write and read than the single `Vector` it replaced. */
   final class CartMachineQ(userId: Long, discountExpiryUs: Long)
       extends KeyedStateMachine[Long, CartOpQ, CartTotalQ] {
-    private var items = Vector.empty[LotQ]
+    @transient private var lots = mutable.HashMap.empty[String, mutable.ArrayDeque[LotQ]]
+    private var totalMilli = 0L
+    private var nItems = 0L
     private var discounted = true
 
     override def onStart(key: Long, ctx: ReplayCtx[CartTotalQ]): Unit =
@@ -90,13 +121,41 @@ object Machines {
     override def onEvent(ts: Long, u: CartOpQ, ctx: ReplayCtx[CartTotalQ]): Unit = {
       if (u.add) {
         val c = if (discounted) Math.floorDiv(u.cost * 9, 10) else u.cost
-        items :+= LotQ(u.name, c, u.qty)
-      } else {
-        items = Machines.removeFifo(items, u.qty)(
-          _.name == u.name, _.qty, (l, q) => l.copy(qty = q))
+        lots.getOrElseUpdate(u.name, mutable.ArrayDeque.empty[LotQ]) += LotQ(c, u.qty)
+        totalMilli += c * u.qty
+        nItems += u.qty
+      } else lots.get(u.name).foreach { q =>
+        var remaining = u.qty
+        while (remaining > 0 && q.nonEmpty) {
+          val l = q.head
+          val taken = math.min(l.qty, remaining)
+          if (taken < l.qty) q(0) = l.copy(qty = l.qty - taken) else q.removeHead()
+          totalMilli -= l.cost * taken
+          nItems -= taken
+          remaining -= taken
+        }
+        if (q.isEmpty) lots.remove(u.name)
       }
-      ctx.emit(CartTotalQ(userId, u.ts_us, u.event_id,
-        items.map(l => l.cost * l.qty).sum, items.map(_.qty.toLong).sum))
+      ctx.emit(CartTotalQ(userId, u.ts_us, u.event_id, totalMilli, nItems))
+    }
+
+    private def writeObject(out: ObjectOutputStream): Unit = {
+      out.defaultWriteObject()
+      out.writeInt(lots.size)
+      lots.foreach { case (name, q) =>
+        out.writeObject(name)
+        out.writeInt(q.size)
+        q.foreach { l => out.writeLong(l.cost); out.writeInt(l.qty) }
+      }
+    }
+
+    private def readObject(in: ObjectInputStream): Unit = {
+      in.defaultReadObject()
+      lots = mutable.HashMap.empty
+      for (_ <- 0 until in.readInt()) {
+        val name = in.readObject().asInstanceOf[String]
+        lots(name) = mutable.ArrayDeque.fill(in.readInt())(LotQ(in.readLong(), in.readInt()))
+      }
     }
   }
 

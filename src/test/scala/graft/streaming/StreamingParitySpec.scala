@@ -176,6 +176,63 @@ class StreamingParitySpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("q135 cart machine: partial lots of several names cross six micro-batches of one hot key") {
+    val sp = spark
+    import sp.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
+    import graft.streaming.Machines.{CartOpQ, CartTotalQ}
+
+    // Per batch, per name, ten cycles of "add a 3-unit lot, remove 3
+    // units" (the first cycle of the first batch removes 1). After the
+    // first cycle each name holds one lot with 2 of its 3 units left,
+    // and every later removal spans two lots: the 2 left of the old lot,
+    // then 1 of the new one. So every batch ends with a partially
+    // consumed lot of each of the three names in the serialized state.
+    // The last batch also over-removes one name and removes an absent
+    // one; the discount expires in the middle of batch 4.
+    val names = Seq("a", "b", "c")
+    val gap = 1000000L
+    var i = 0L
+    def op(name: String, qty: Int, add: Boolean) = {
+      i += 1
+      CartOpQ(9L, T0 + i * gap, i, name, 1000L + 37L * i, qty, add)
+    }
+    val batches = (0 until 6).map { b =>
+      (0 until 10).flatMap { c =>
+        names.flatMap(n => Seq(op(n, 3, add = true),
+          op(n, if (b == 0 && c == 0) 1 else 3, add = false)))
+      } ++ (if (b == 5) Seq(op("a", 5, add = false), op("zz", 1, add = false)) else Nil)
+    }
+    val ops = batches.flatten
+    val expiry = batches(3)(30).ts_us + gap / 2
+
+    val batchOut = Replay.run(sp.createDataset(ops), "user_id", "ts_us", "event_id")(
+        _.user_id, _.ts_us)(uid => new Machines.CartMachineQ(uid, expiry))
+      .collect().toSeq.sortBy(_.event_id)
+    assert(batchOut == CartMachineQEquivalenceSpec.drive(new VectorCartMachineQ(9L, expiry), ops))
+    // each batch boundary leaves 2 of 3 units of every name's front lot
+    batches.init.map(_.last.event_id).foreach { id =>
+      assert(batchOut.find(_.event_id == id).get.n_items == 2L * names.size)
+    }
+
+    val mem = MemoryStream[CartOpQ]
+    val withWm = mem.toDS()
+      .withColumn("ts", timestamp_micros(col("ts_us")))
+      .withWatermark("ts", "0 seconds")
+      .as[CartOpQ]
+    val out = AspStream.run(withWm)(_.user_id, _.ts_us, _.event_id)(
+      uid => new Machines.CartMachineQ(uid, expiry))
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val q = out.writeStream.format("memory").queryName("cartq_hot_stream")
+      .option("checkpointLocation", ckpt).outputMode("append").start()
+    try {
+      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+      val streamOut = sp.sql("SELECT * FROM cartq_hot_stream").as[CartTotalQ]
+        .collect().toSeq.sortBy(_.event_id)
+      assert(streamOut == batchOut)
+    } finally q.stop()
+  }
+
   test("sub-ms timer precision: event in [floor-ms(due), due) in a LATER batch stays before the timer") {
     val sp = spark
     import sp.implicits._
